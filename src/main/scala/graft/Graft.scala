@@ -20,13 +20,38 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object Graft {
 
-  /** Tuned local session (cluster callers pass their own master via
-    * spark-submit and only inherit the conf + extensions). */
-  def session(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
+  /** Local cores: `SPARK_GRAFT_CPUS` when set, else every processor. */
+  def defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  /** The one session constructor: the library, `Bench`, `Verify`, the
+    * tools and the tests all run this configuration. Everything not set
+    * here is the Spark default (AQE with partition coalescing and
+    * skew-join splitting, 128 MB scan splits, parquet filter pushdown).
+    *  - shuffle partitions = 2x cores: AQE only COALESCES partitions,
+    *    never splits non-skewed ones, so start high;
+    *  - Kryo: the RDD-side shuffles (the contraction fixpoint) serialize
+    *    Long-pair tuples, ~2-3x leaner than Java serialization; the SQL
+    *    path keeps its own row format;
+    *  - UTC session time zone;
+    *  - `nanosAsLong`: events.parquet stores ts as TIMESTAMP(NANOS),
+    *    which Spark 4 reads only through this escape hatch — a
+    *    session-wide reader setting, never toggled inside a query;
+    *  - the graft_* SQL functions.
+    * Runtime SQL settings apply to a reused session too; Kryo and the
+    * master apply only when this call starts the context. Cluster
+    * callers pass their own master via spark-submit and inherit the
+    * rest. */
+  def session(cores: Int = defaultCores): SparkSession = {
     core.GraftConf.privateLocalDirs()
-    val spark = core.GraftConf.tuned(
-      SparkSession.builder().master(s"local[$cores]"), cores).getOrCreate()
-    core.GraftConf.runtime(spark)
+    val spark = SparkSession.builder()
+      .master(s"local[$cores]")
+      .appName("graft")
+      .config("spark.sql.shuffle.partitions", (math.max(cores, 1) * 2).toString)
+      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .getOrCreate()
     plans.GraftExtensions.install(spark)
     spark
   }

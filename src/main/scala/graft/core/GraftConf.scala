@@ -1,33 +1,8 @@
 package graft.core
 
-import org.apache.spark.sql.SparkSession
-
-/** Recommended session configuration, local-mode and cluster-scale.
-  *
-  * The same code runs in both; only these knobs move. Values follow the
-  * sizing rules in SURVEY §7.4.6 / the Spark tuning guide: shuffle
-  * partitions ~ 2-3x total cores (AQE coalesces down), 128 MB scan
-  * splits, AQE on with skew-join splitting, small dims broadcast.
-  */
+/** Process-level guards for local sessions and timing runs. The session
+  * configuration itself lives in one place, `graft.Graft.session`. */
 object GraftConf {
-
-  /** Apply to a builder before getOrCreate. `cores` = total executor
-    * cores (32 for the local harness; thousands on a real cluster). */
-  def tuned(builder: SparkSession.Builder, cores: Int): SparkSession.Builder =
-    builder
-      // ~2x cores per the class sizing rule: AQE can only COALESCE
-      // partitions, never split non-skewed ones, so start high
-      .config("spark.sql.shuffle.partitions", (math.max(cores, 1) * 2).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      // RDD-side shuffles (the contraction fixpoint) serialize Long-pair
-      // tuples: Kryo is ~2-3x leaner than Java serialization there; the
-      // SQL path is unaffected (Tungsten rows have their own format)
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", (128L * 1024 * 1024).toString)
-      .config("spark.sql.parquet.filterPushdown", "true")
-      .config("spark.sql.session.timeZone", "UTC")
 
   /** Create every configured Spark local (spill) directory before the
     * session starts. Round 12's official driver bench died 143/149 with
@@ -224,16 +199,6 @@ object GraftConf {
       case _ => ()
     }
   }
-
-  /** Runtime SQL confs that must hold for the engine's readers, applied to
-    * an already-built session (builder-time configs don't reach reused
-    * sessions). `nanosAsLong`: the driver's events.parquet stores ts as
-    * TIMESTAMP(NANOS), which Spark 4 only reads via this escape hatch —
-    * a session-wide reader setting, deliberately NOT toggled inside query
-    * functions (a query silently flipping session state is a footgun for
-    * concurrent callers). */
-  def runtime(spark: SparkSession): Unit =
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
   /** 100 TB notes (not settable from inside the job, documented here):
     *  - shuffle partitions: target ~128-256 MB per reduce partition;

@@ -1,7 +1,6 @@
 package graft.ingest
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming ingest pipeline (SURVEY §3.1): frames -> decode -> broadcast
@@ -37,7 +36,7 @@ object IngestStream {
       checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime("5 seconds")): StreamingQuery = {
     val ticks = TickDecoder.decode(spark, frames)
-    val enriched = TokenDirectory.enrich(ticks.toDF(), tokenDim)
+    val enriched = TokenDirectory.enrich(ticks, tokenDim)
     enriched.writeStream
       .queryName("graft-ingest")
       .option("checkpointLocation", checkpointDir)
@@ -54,33 +53,11 @@ object IngestStream {
       spark: SparkSession,
       frames: Dataset[Array[Byte]],
       trigger: Trigger = Trigger.ProcessingTime("5 seconds")): StreamingQuery =
-    TickDecoder.decode(spark, frames).toDF()
+    TickDecoder.decode(spark, frames)
       .writeStream
       .queryName("graft-ingest-console")
       .format("console")
       .option("truncate", "false")
       .trigger(trigger)
       .start()
-
-  /** The reference's periodic self-verification queries
-    * (/root/reference/db/clickhouse.go:122-187), re-expressed over the
-    * sink table: latest row + daily stats for a token. */
-  def verifyLastInserted(spark: SparkSession, sinkDir: String, token: String): DataFrame =
-    spark.read.parquet(sinkDir)
-      .filter(col("token") === token)
-      .orderBy(col("exchange_timestamp").desc, col("sequence_number").desc)
-      .limit(1)
-
-  def dailyStats(spark: SparkSession, sinkDir: String, token: String): DataFrame =
-    spark.read.parquet(sinkDir)
-      .filter(col("token") === token)
-      .groupBy(to_date(col("exchange_timestamp")).as("trade_date"))
-      .agg(
-        // reference parity: session extremes, not captured-LTP extremes
-        // (/root/reference/db/clickhouse.go:159-162); LTP frames fall back
-        min(coalesce(col("low_price"), col("last_traded_price"))).as("low_price"),
-        max(coalesce(col("high_price"), col("last_traded_price"))).as("high_price"),
-        sum("volume").as("total_volume"),
-        count(lit(1)).as("tick_count"))
-      .orderBy(col("trade_date").desc)
 }

@@ -1,52 +1,45 @@
 package graft.ingest
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Codec, Schemas}
-import graft.core.Schemas.Tick
-import java.sql.Timestamp
+import org.apache.spark.sql.types.StringType
+import graft.core.Schemas
+import graft.plans.GraftExtensions
 
-/** Wire-frame decoding stage: Dataset[Array[Byte]] -> Dataset[Tick].
+/** Wire-frame decoding stage: Dataset[Array[Byte]] -> tick rows.
   *
-  * Typed map over the binary payload (SURVEY §2.1 S2): the decoder is pure
-  * Scala (graft.core.Codec) so it unit-tests without a cluster and runs
-  * identically in batch and streaming. Short/invalid frames are dropped and
-  * counted via an accumulator rather than silently zero-filled like the
-  * reference (/root/reference/parser/binary.go:47-76 ignores read errors).
+  * A projection through `graft_decode_frame` (plans.DecodeTickFrameExpr),
+  * the only place the byte layout maps to columns. Short/invalid frames
+  * decode to null; they are dropped and counted rather than silently
+  * zero-filled like the reference (its parser/binary.go:47-76
+  * ignores read errors).
   */
 object TickDecoder {
 
-  /** Decode frames; invalid frames increment the "graft.decode.errors"
-    * accumulator and are dropped (at-least-once ingest keeps flowing). */
-  def decode(spark: SparkSession, frames: Dataset[Array[Byte]]): Dataset[Tick] = {
-    import spark.implicits._
-    val errors = spark.sparkContext.longAccumulator("graft.decode.errors")
-    frames.flatMap { bytes =>
-      Codec.decode(bytes) match {
-        case Left(_) =>
-          errors.add(1L)
-          None
-        case Right(f) =>
-          val ingestTs = new Timestamp(System.currentTimeMillis())
-          Some(Tick(
-            token = f.token,
-            symbol = None, // enrichment joins the symbol later
-            exchange_type = f.exchangeType,
-            subscription_mode = f.subscriptionMode,
-            sequence_number = f.sequenceNumber,
-            exchange_timestamp = new Timestamp(f.exchangeTimestampMs),
-            ingest_timestamp = ingestTs,
-            last_traded_price = Codec.paiseToRupees(f.lastTradedPricePaise),
-            last_traded_quantity = f.lastTradedQuantity,
-            average_traded_price = f.averageTradedPricePaise.map(Codec.paiseToRupees),
-            open_price = f.openPricePaise.map(Codec.paiseToRupees),
-            high_price = f.highPricePaise.map(Codec.paiseToRupees),
-            low_price = f.lowPricePaise.map(Codec.paiseToRupees),
-            close_price = f.closePricePaise.map(Codec.paiseToRupees),
-            volume = f.volume,
-            total_buy_quantity = f.totalBuyQuantity,
-            total_sell_quantity = f.totalSellQuantity))
-      }
-    }
+  /** Name of the per-batch observation whose `decode_errors` counts the
+    * malformed frames (`StreamingQueryProgress.observedMetrics`). */
+  val Observation = "graft.decode"
+
+  /** Decode frames into `Schemas.tickSchema`'s columns, in order. `symbol`
+    * is null until enrichment; `ingest_timestamp` is the micro-batch time
+    * (`current_timestamp()`), so a replayed batch reproduces it. */
+  def decode(spark: SparkSession, frames: Dataset[Array[Byte]]): DataFrame = {
+    val t = col("t")
+    frames.toDF("payload")
+      // Each micro-batch plans its batch time as a new literal, and
+      // generated code inlines literals. Stamped here, below the
+      // observation, only this small stage recompiles every batch; the
+      // filter/enrich stage above keeps hitting the codegen cache.
+      .select(GraftExtensions.decodeFrame(col("payload")).as("t"),
+        current_timestamp().as("ingest_timestamp"))
+      // the observation also keeps the null filter from being pushed
+      // below the projection, which would decode every frame twice
+      .observe(Observation, count_if(t.isNull).as("decode_errors"))
+      .where(t.isNotNull)
+      .select(Schemas.tickSchema.fieldNames.toSeq.map {
+        case "symbol" => lit(null).cast(StringType).as("symbol")
+        case "ingest_timestamp" => col("ingest_timestamp")
+        case name => t(name).as(name)
+      }: _*)
   }
 }

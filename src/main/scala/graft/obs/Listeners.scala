@@ -16,6 +16,9 @@ final class IngestMetricsListener extends StreamingQueryListener {
   val lastProgressEpochMs = new AtomicLong(0)
   val startedAtMs = new AtomicLong(0)
   val queryErrors = new AtomicLong(0)
+  /** Malformed frames the ingest decoder dropped (its per-batch
+    * `graft.decode` observation, summed). */
+  val decodeErrors = new AtomicLong(0)
 
   /** Bucketed batch-duration histogram — the `_bucket` series a
     * dashboard built against the reference's duration histograms
@@ -32,6 +35,8 @@ final class IngestMetricsListener extends StreamingQueryListener {
     rowsProcessed.addAndGet(event.progress.numInputRows)
     batchesProcessed.incrementAndGet()
     batchDuration.observeMillis(event.progress.batchDuration)
+    Option(event.progress.observedMetrics.get(graft.ingest.TickDecoder.Observation))
+      .foreach(m => decodeErrors.addAndGet(m.getAs[Long]("decode_errors")))
     // numeric, not the ISO string: a bare string value is not valid
     // Prometheus text exposition and would fail the whole scrape
     try lastProgressEpochMs.set(
@@ -51,6 +56,7 @@ final class IngestMetricsListener extends StreamingQueryListener {
     s"""graft_ticks_processed_total ${rowsProcessed.get}
        |graft_batches_processed_total ${batchesProcessed.get}
        |graft_query_errors_total ${queryErrors.get}
+       |graft_decode_errors_total ${decodeErrors.get}
        |graft_uptime_millis $uptime
        |graft_last_progress_epoch_ms ${lastProgressEpochMs.get}
        |graft_memory_used_bytes ${rt.totalMemory - rt.freeMemory}

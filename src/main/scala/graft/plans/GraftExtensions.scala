@@ -11,7 +11,7 @@ import org.apache.spark.sql.graftbridge.Bridge
   *
   * Install with
   *   spark.sql.extensions=graft.plans.GraftExtensions
-  * or programmatically via `SparkSession.builder.withExtensions(new
+  * or programmatically via the session builder's `withExtensions(new
   * GraftExtensions)`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

@@ -36,7 +36,7 @@ object MarketQueries {
   val Tokens = Seq(1, 7, 42, 99)
 
   /** events.parquet stores ts as TIMESTAMP(NANOS); session setup
-    * (GraftConf.runtime) enables the nanosAsLong reader escape hatch, and
+    * (Graft.session) enables the nanosAsLong reader escape hatch, and
     * this normalizes to TimestampType (micros, floor — matching DuckDB's
     * ns->us truncation). */
   def events(spark: SparkSession, dir: String): DataFrame = {

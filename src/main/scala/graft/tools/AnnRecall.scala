@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.Similarity
 
@@ -18,10 +17,7 @@ object AnnRecall {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val nQueries = if (args.length > 1) args(1).toInt else 50
     val k = if (args.length > 2) args(2).toInt else 5
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Graft.session()
     spark.sparkContext.setLogLevel("ERROR")
 
     val qids = (0L until nQueries.toLong).toSeq

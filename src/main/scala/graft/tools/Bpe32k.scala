@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Round-15 (r14 verdict #8): the full-vocabulary 32k-merge BPE
@@ -24,14 +23,9 @@ object Bpe32k {
     val numMerges = args.lift(1).map(_.toInt).getOrElse(32000)
     val tokDir = args.lift(2).getOrElse("/tmp/graft_tok32k")
     val encodeDir = args.lift(3).getOrElse("/root/testdata/sf0.01")
-    graft.core.GraftConf.privateLocalDirs()
-    val spark = SparkSession.builder()
-      .appName("graft-bpe32k").master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      // uncapped plan strings are quadratic in round count (BpeRounds)
-      .config("spark.sql.maxPlanStringLength", "16384")
-      .getOrCreate()
-    graft.core.GraftConf.runtime(spark)
+    val spark = graft.Graft.session()
+    // uncapped plan strings are quadratic in round count (BpeRounds)
+    spark.conf.set("spark.sql.maxPlanStringLength", "16384")
     spark.sparkContext.setLogLevel("WARN")
 
     val ops = graft.ops.TextAnalysis

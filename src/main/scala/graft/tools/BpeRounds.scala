@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic: driver-coordinated BPE round count vs merge count at a
   * given batch width — the batching win SCALING.md tables. Usage:
   *   run_main.sh graft.tools.BpeRounds <sfDir> <numMerges> <maxBatch...>
@@ -12,15 +10,11 @@ object BpeRounds {
     val dir = args(0)
     val numMerges = args(1).toInt
     val batches = args.drop(2).map(_.toInt)
-    val spark = SparkSession.builder()
-      .appName("graft-bpe-rounds").master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      // nested per-round InMemoryRelations make UNCAPPED plan strings
-      // quadratic in round count — the SQL-listener event alone OOMs a
-      // long sequential run before any real work does
-      .config("spark.sql.maxPlanStringLength", "16384")
-      .getOrCreate()
-    graft.core.GraftConf.runtime(spark)
+    val spark = graft.Graft.session()
+    // nested per-round InMemoryRelations make UNCAPPED plan strings
+    // quadratic in round count — the SQL-listener event alone OOMs a
+    // long sequential run before any real work does
+    spark.conf.set("spark.sql.maxPlanStringLength", "16384")
     spark.sparkContext.setLogLevel("WARN")
     val docs = graft.ops.TextAnalysis.docs(spark, dir)
     for (b <- batches) {

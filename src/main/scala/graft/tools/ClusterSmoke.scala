@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Output-shape smoke for the near-dup dedup contracts: replicates the
@@ -30,11 +29,7 @@ object ClusterSmoke {
     // this smoke exists to warn about) and time the cluster pipeline
     // stage by stage instead
     val stagesOnly = args.contains("--stages-only")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Graft.session()
     spark.sparkContext.setLogLevel("ERROR")
 
     def replicated(k: Int): String = {

@@ -4,7 +4,6 @@ import graft.core.{Codec, Schemas}
 import graft.ingest.{IngestStream, TokenDirectory}
 import graft.obs.IngestMetricsListener
 import graft.sources.FrameSpool
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 
 /** Backlog-recovery measurement (r15 verdict #7): the at-least-once
@@ -41,14 +40,9 @@ object IngestRecovery {
     val stallSec = args.lift(3).map(_.toInt).getOrElse(60)
     val catchupFactor = args.lift(4).map(_.toInt).getOrElse(4)
     val nTokens = 50
-    val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
 
-    graft.core.GraftConf.privateLocalDirs()
-    val spark = graft.core.GraftConf.tuned(
-      SparkSession.builder().master(s"local[$cores]").appName("ingest-recovery"), cores)
-      .getOrCreate()
+    val spark = graft.Graft.session()
     spark.sparkContext.setLogLevel("WARN")
-    graft.core.GraftConf.runtime(spark)
 
     val root = new java.io.File(work)
     if (root.exists()) {

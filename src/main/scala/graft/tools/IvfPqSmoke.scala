@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.ops.Similarity
 
 /** Large-k composed-index scale smoke (round 9): the broadcast-join
@@ -28,11 +27,7 @@ object IvfPqSmoke {
   def main(args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toLong else 100000L
     val seedBits = if (args.length > 1) args(1).toInt else 10
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Graft.session()
     spark.sparkContext.setLogLevel("ERROR")
 
     def time[T](fn: => T): (T, Double) = {

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale smoke for the dataset-mixing operators: synthetic corpora at 1x
@@ -23,10 +23,7 @@ object MixSmoke {
 
   def main(args: Array[String]): Unit = {
     val base = if (args.nonEmpty) args(0).toLong else 2000000L // 1x = 2M docs
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Graft.session()
     spark.sparkContext.setLogLevel("ERROR")
 
     def docs(n: Long): DataFrame = spark.range(n).select(

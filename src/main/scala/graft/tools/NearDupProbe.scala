@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Measures embeddingNearDup's nBits lever on a real corpus dir:
   * wall-clock and surviving pair count per bucket width, plus the pair
@@ -15,12 +14,8 @@ object NearDupProbe {
     val dir = if (args.length > 0) args(0) else "/tmp/graft_sf1"
     val threshold = if (args.length > 1) args(1).toDouble else 0.35
     val bits = if (args.length > 2) args.drop(2).map(_.toInt).toSeq else Seq(4, 6, 8)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Graft.session()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.core.GraftConf.runtime(spark)
 
     def pairs(nBits: Int): Set[(Long, Long)] =
       graft.ops.Similarity.embeddingNearDup(spark, dir, threshold, nBits)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Threshold-dependence probe for the lossless PPJoin path: the Jaccard
@@ -20,11 +19,7 @@ object PpjoinProbe {
     val srcDir = if (positional.length > 0) positional(0) else "/root/testdata/sf0.1"
     val factor = if (positional.length > 1) positional(1).toInt else 10
     val boilerOnly = args.contains("--boilerplate-only")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Graft.session()
     spark.sparkContext.setLogLevel("ERROR")
 
     val src = spark.read.parquet(s"$srcDir/documents.parquet")

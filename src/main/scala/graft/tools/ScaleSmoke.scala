@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Operator-level scale smoke for the round-3 operators: synthetic tables
@@ -19,10 +19,7 @@ object ScaleSmoke {
 
   def main(args: Array[String]): Unit = {
     val base = if (args.nonEmpty) args(0).toLong else 1000000L // 1x = 1M rows
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Graft.session()
     spark.sparkContext.setLogLevel("ERROR")
 
     val keys = 1000

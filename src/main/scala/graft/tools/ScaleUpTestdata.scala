@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Builds an sf1-equivalent bench corpus (10x sf0.1) under a writable
@@ -54,12 +54,8 @@ object ScaleUpTestdata {
     val src = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val k = if (args.length > 2) args(2).toInt else 10
     val strideMul = if (args.length > 3) args(3).toLong else 1L
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Graft.session()
     spark.sparkContext.setLogLevel("WARN")
-    graft.core.GraftConf.runtime(spark)
 
     def rd(t: String) = spark.read.parquet(s"$src/$t.parquet")
     def wr(df: DataFrame, t: String): Unit = {

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Round-15 diagnostic for the dedup_simhash_clusters sf100 OOM
@@ -24,12 +23,7 @@ object SimhashProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val stopAfter = args.lift(1).map(_.toInt).getOrElse(4)
-    val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    graft.core.GraftConf.privateLocalDirs()
-    val spark = graft.core.GraftConf.tuned(
-      SparkSession.builder().master(s"local[$cores]").appName("simhashprobe"), cores)
-      .getOrCreate()
-    graft.core.GraftConf.runtime(spark)
+    val spark = graft.Graft.session()
     spark.sparkContext.setLogLevel("WARN")
 
     def residency(): String = {

@@ -86,9 +86,7 @@ object SyntheticEmbeddings {
     val dir = args(0)
     val kind = args(1)
     val n = args(2).toLong
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Graft.session()
     spark.sparkContext.setLogLevel("ERROR")
     val df = kind match {
       case "clustered" =>

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Round-16 (r15 verdict #1, second half): the 16k tokenizer artifact's
@@ -17,12 +16,7 @@ object TokEncodeCheck {
     val tokDir = args.headOption.getOrElse("/tmp/graft_tok16k")
     val numMerges = args.lift(1).map(_.toInt).getOrElse(16000)
     val encodeDir = args.lift(2).getOrElse("/root/testdata/sf0.01")
-    graft.core.GraftConf.privateLocalDirs()
-    val spark = SparkSession.builder()
-      .appName("graft-tok-encode-check").master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .getOrCreate()
-    graft.core.GraftConf.runtime(spark)
+    val spark = graft.Graft.session()
     spark.sparkContext.setLogLevel("WARN")
 
     val ops = graft.ops.TextAnalysis

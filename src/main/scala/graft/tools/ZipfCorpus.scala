@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Deterministic Zipf-vocabulary corpus generator — the measurement
   * corpus the round-13 1000-merge BPE run showed the SYNTHETIC testdata
@@ -98,12 +97,7 @@ object ZipfCorpus {
     val zipfS = if (args.length > 4) args(4).toDouble else 1.07
     val seed = if (args.length > 5) args(5).toLong else 13L
 
-    val spark = SparkSession.builder().master("local[32]")
-      .appName("graft-zipf-corpus")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    graft.core.GraftConf.runtime(spark)
+    val spark = graft.Graft.session()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -1,15 +1,39 @@
 package graft.core
 
+import org.apache.spark.network.util.JavaUtils
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The round-14 spill-dir contract: every JVM owns a private local dir
-  * (round 13's official bench died when a concurrently-launched script
+/** What `graft.Graft.session` yields, and the round-14 spill-dir
+  * contract: every JVM owns a private local dir (round 13's official bench died when a concurrently-launched script
   * wiped the SHARED /tmp/spark-local mid-flight — see
   * GraftConf.privateLocalDirs). The env-rewrite arm (SPARK_LOCAL_DIRS
   * exported) is exercised out-of-process by scripts/run_main.sh
   * launches; here we pin the in-process contract: a unique owned dir
   * exists, the property points at it, and the call is idempotent. */
 class GraftConfSpec extends AnyFunSuite {
+
+  test("Graft.session: 2n shuffle partitions, Kryo, UTC, nanosAsLong, graft_* SQL") {
+    // master and serializer apply only when the call starts the context:
+    // a session another spec built its own way must not answer for it
+    SparkSession.getDefaultSession.filter(_.sparkContext.appName != "graft").foreach(_.stop())
+    val n = graft.Graft.defaultCores
+    val spark = graft.Graft.session(n)
+    def conf(k: String): String = spark.conf.get(k)
+    assert(conf("spark.sql.shuffle.partitions") === (2 * n).toString)
+    assert(spark.sparkContext.getConf.get("spark.serializer") ===
+      "org.apache.spark.serializer.KryoSerializer")
+    assert(conf("spark.sql.session.timeZone") === "UTC")
+    assert(conf("spark.sql.legacy.parquet.nanosAsLong") === "true")
+    assert(spark.sql("SELECT graft_decode_frame(X'00') AS t").head().isNullAt(0))
+    // no longer set by the constructor: these are Spark's defaults
+    assert(conf("spark.sql.adaptive.enabled") === "true")
+    assert(conf("spark.sql.adaptive.coalescePartitions.enabled") === "true")
+    assert(conf("spark.sql.adaptive.skewJoin.enabled") === "true")
+    assert(JavaUtils.byteStringAsBytes(conf("spark.sql.files.maxPartitionBytes")) ===
+      128L * 1024 * 1024)
+    assert(conf("spark.sql.parquet.filterPushdown") === "true")
+  }
 
   test("privateLocalDirs creates a unique owned dir and is idempotent") {
     GraftConf.privateLocalDirs()

@@ -3,6 +3,8 @@ package graft.ingest
 import graft.SparkSpec
 import graft.core.{Codec, Schemas}
 import graft.core.Schemas.TickFrame
+import graft.queries.TickQueries
+import graft.storage.TickTable
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.functions._
@@ -51,15 +53,30 @@ class IngestSpec extends SparkSpec {
       frame("2885", 2, t0 + 1000, 286600L),
       frame("43607", 1, t0 + 2000, 12345L),
       frame("UNKNOWN", 1, t0 + 3000, 100L),     // not in dim: symbol null
-      Array[Byte](1, 2, 3))                      // short frame: dropped
+      Array[Byte](1, 2, 3),                      // short frame: dropped
+      frame("2885", 3, t0 + 4000, 286700L).take(Codec.QuoteFrameLen - 1)) // truncated: dropped
+
+    // the decoder's own output: tickSchema's names and types, in order
+    val decoded = TickDecoder.decode(spark, stream.toDS()).schema
+    assert(decoded.map(f => f.name -> f.dataType) ===
+      Schemas.tickSchema.map(f => f.name -> f.dataType))
 
     val q = IngestStream.start(spark, stream.toDS(), dim, sink, ckpt,
       Trigger.ProcessingTime("1 second"))
     q.processAllAvailable()
+    val progress = q.lastProgress
     q.stop()
 
-    val out = spark.read.parquet(sink)
-    assert(out.count() === 4) // 5 frames, 1 invalid dropped
+    // malformed frames are counted on the batch's progress, not lost
+    val observed = progress.observedMetrics.get(TickDecoder.Observation)
+    assert(observed != null, s"no ${TickDecoder.Observation} observation in $progress")
+    assert(observed.getAs[Long]("decode_errors") === 2L)
+
+    val out = TickTable.read(spark, sink)
+    assert(out.count() === 4) // 6 frames, 2 invalid dropped
+    // ingest_timestamp is the micro-batch time: one value per batch
+    assert(out.groupBy("batch_id").agg(countDistinct("ingest_timestamp").as("n"))
+      .collect().forall(_.getAs[Long]("n") == 1L))
     assert(out.filter(col("token") === "2885" && col("symbol") === "RELIANCE").count() === 2)
     assert(out.filter(col("token") === "UNKNOWN").select("symbol").head().isNullAt(0))
     // paise scaling applied at decode
@@ -67,10 +84,10 @@ class IngestSpec extends SparkSpec {
       .select("last_traded_price").head().getDouble(0) === 2865.50)
 
     // the reference's self-verification queries over the sink
-    val latest = IngestStream.verifyLastInserted(spark, sink, "2885").collect()
+    val latest = TickQueries.latestTick(out, "2885").collect()
     assert(latest.length === 1)
     assert(latest(0).getAs[Long]("sequence_number") === 2L)
-    val stats = IngestStream.dailyStats(spark, sink, "2885").collect()
+    val stats = TickQueries.dailyStats(out, "2885").collect()
     assert(stats.length === 1)
     assert(stats(0).getAs[Long]("tick_count") === 2L)
   }

@@ -42,6 +42,7 @@ class ObsSpec extends SparkSpec {
       assert(mCode === 200)
       assert(metrics.contains("graft_ticks_processed_total 3"))
       assert(metrics.contains("graft_batches_processed_total"))
+      assert(metrics.contains("graft_decode_errors_total 0")) // no frames decoded here
 
       // bucketed duration histogram in real exposition shape: cumulative
       // le-labeled buckets ending at +Inf == _count, populated by the
@@ -117,6 +118,31 @@ class ObsSpec extends SparkSpec {
       spark.streams.removeListener(listener)
       spark.sparkContext.removeSparkListener(workers)
     }
+  }
+
+  test("graft_decode_errors_total counts the frames ingest dropped as malformed") {
+    import spark.implicits._
+    val listener = new IngestMetricsListener
+    spark.streams.addListener(listener)
+    try {
+      implicit val ctx = spark.sqlContext
+      val stream = MemoryStream[Array[Byte]]
+      def frame(seq: Long): Array[Byte] = graft.core.Codec.encode(graft.core.Schemas.TickFrame(
+        1, 1, "2885", seq, 1704447000000L + seq, 286550L,
+        None, None, None, None, None, None, None, None, None))
+      stream.addData(frame(1), Array[Byte](9, 9), frame(2), Array.fill[Byte](60)(0))
+      val dir = java.nio.file.Files.createTempDirectory("obs-decode").toString
+      val dim = Seq(("RELIANCE", "2885")).toDF("symbol", "token")
+      val q = graft.ingest.IngestStream.start(spark, stream.toDS(), dim,
+        s"$dir/sink", s"$dir/ckpt", Trigger.ProcessingTime("200 milliseconds"))
+      q.processAllAvailable()
+      q.stop()
+      val deadline = System.currentTimeMillis() + 10000
+      while (listener.decodeErrors.get == 0 && System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+      assert(listener.snapshot().linesIterator.contains("graft_decode_errors_total 2"),
+        listener.snapshot())
+    } finally spark.streams.removeListener(listener)
   }
 
   test("PromHistogram: cumulative buckets, sum, +Inf overflow, exposition format") {

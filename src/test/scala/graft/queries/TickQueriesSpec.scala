@@ -3,15 +3,17 @@ package graft.queries
 import graft.SparkSpec
 import graft.core.Codec
 import graft.core.Schemas.TickFrame
-import graft.ingest.{IngestStream, ReplaySource}
+import graft.ingest.IngestStream
 import graft.ops.Skew
+import graft.sources.FrameSpool
 import graft.storage.TickTable
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import java.nio.file.Files
 
-/** End-to-end on the production tick schema: replay source -> ingest
-  * pipeline -> tick table -> the reference's query surface. */
+/** End-to-end on the production tick schema: spool file -> the shipped
+  * replay source (FrameReplayProvider) -> ingest pipeline -> tick table ->
+  * the reference's query surface. */
 class TickQueriesSpec extends SparkSpec {
 
   private val t0 = 1704447000000L // 2024-01-05 09:30 UTC
@@ -26,17 +28,21 @@ class TickQueriesSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("tickckpt").toString
     val spool = Files.createTempDirectory("spool").toString
     val day = 86400000L
-    ReplaySource.spool(spark, Seq(
+    FrameSpool.write(spool, Seq(
       frame("2885", 1, t0, 286550L, 100),
       frame("2885", 2, t0 + 60000, 287000L, 150),
       frame("2885", 3, t0 + day, 288000L, 200),     // next trading day
       frame("43607", 1, t0 + 1000, 12345L, 10),
-      frame("43607", 2, t0 + 2000, 12400L, 20)), spool)
-    val dim = {
-      import spark.implicits._
-      Seq(("RELIANCE", "2885"), ("NIFTY", "43607")).toDF("symbol", "token")
-    }
-    val q = IngestStream.start(spark, ReplaySource.stream(spark, spool, filesPerTrigger = 2),
+      frame("43607", 2, t0 + 2000, 12400L, 20)), "ticks-000")
+    import spark.implicits._
+    val dim = Seq(("RELIANCE", "2885"), ("NIFTY", "43607")).toDF("symbol", "token")
+    // two frames per micro-batch: the backlog drains over three batches
+    val frames = spark.readStream
+      .format("graft.sources.FrameReplayProvider")
+      .option("path", spool)
+      .option("maxFramesPerBatch", "2")
+      .load().select("payload").as[Array[Byte]]
+    val q = IngestStream.start(spark, frames,
       dim, sinkDir = sink, checkpointDir = ckpt, Trigger.ProcessingTime("1 second"))
     q.processAllAvailable()
     q.stop()
