@@ -3,8 +3,11 @@ package graft.ingest
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-/** Streaming ingest pipeline (SURVEY §3.1): frames -> decode -> broadcast
-  * enrichment -> 5 s micro-batch Parquet append with checkpointing.
+/** Streaming ingest pipeline (SURVEY §3.1): frames -> decode -> symbol
+  * enrichment -> 5 s micro-batch Parquet append with checkpointing. The
+  * token directory is resolved once, when `start` builds the plan
+  * (TokenDirectory.enrich), so each micro-batch runs just its decode and
+  * write jobs.
   *
   * Implements the reference's *documented* batch semantics
   * (/root/reference/README.md:116-117: 1000-row batches, 5 s flush) with

@@ -28,10 +28,21 @@ final class IngestMetricsListener extends StreamingQueryListener {
     "graft_batch_duration_seconds",
     "Micro-batch wall-clock duration (trigger to commit)")
 
+  /** Per-phase batch time from `StreamingQueryProgress.durationMs`, one
+    * series per phase; a phase the trigger skipped (an idle trigger plans
+    * nothing) counts as 0 s, so every `_count` equals the batches seen. */
+  val batchPhase = new PromHistogramFamily(
+    "graft_batch_phase_seconds",
+    "Micro-batch time per phase (StreamingQueryProgress.durationMs)",
+    "phase", IngestMetricsListener.Phases,
+    PromHistogram.DefaultBuckets ++ Seq(2.5, 5.0, 10.0))
+
   override def onQueryStarted(event: QueryStartedEvent): Unit =
     startedAtMs.compareAndSet(0, System.currentTimeMillis())
 
   override def onQueryProgress(event: QueryProgressEvent): Unit = {
+    IngestMetricsListener.Phases.foreach(p => batchPhase(p).observeMillis(
+      Option(event.progress.durationMs.get(p)).fold(0L)(_.longValue)))
     rowsProcessed.addAndGet(event.progress.numInputRows)
     batchesProcessed.incrementAndGet()
     batchDuration.observeMillis(event.progress.batchDuration)
@@ -63,8 +74,15 @@ final class IngestMetricsListener extends StreamingQueryListener {
        |graft_cpu_usage ${ProcessGauges.cpuUsage}
        |graft_threads ${ProcessGauges.threadCount}
        |${batchDuration.exposition}
+       |${batchPhase.exposition}
        |${PipelineMetrics.gateDuration.exposition}""".stripMargin
   }
+}
+
+object IngestMetricsListener {
+  /** The `durationMs` phases exported as `graft_batch_phase_seconds`. */
+  val Phases: Seq[String] =
+    Seq("latestOffset", "queryPlanning", "addBatch", "walCommit", "commitOffsets")
 }
 
 /** Per-worker processed/error counters (SURVEY parity with the

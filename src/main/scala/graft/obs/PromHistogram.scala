@@ -20,7 +20,8 @@ import java.util.concurrent.atomic.LongAdder
   * Prometheus client behavior; series are monotone so rates stay
   * correct. */
 final class PromHistogram(val name: String, val help: String,
-                          val buckets: Seq[Double] = PromHistogram.DefaultBuckets) {
+                          val buckets: Seq[Double] = PromHistogram.DefaultBuckets,
+                          val labels: String = "") {
   require(buckets == buckets.sorted && buckets.distinct == buckets,
     s"buckets must be strictly increasing: $buckets")
 
@@ -45,25 +46,45 @@ final class PromHistogram(val name: String, val help: String,
   def observed: Long = count.sum()
 
   /** Prometheus text exposition lines (no trailing newline). */
-  def exposition: String = {
+  def exposition: String = PromHistogram.header(name, help) + samples
+
+  /** The `_bucket`/`_sum`/`_count` sample lines alone, each carrying
+    * `labels` (e.g. `phase="addBatch"`), no trailing newline. */
+  def samples: String = {
     val sb = new StringBuilder
-    sb.append(s"# HELP $name $help\n")
-    sb.append(s"# TYPE $name histogram\n")
+    val lbl = if (labels.isEmpty) "" else s"{$labels}"
+    val lblLe = if (labels.isEmpty) "{le=" else s"{$labels,le="
     var cum = 0L
     def le(b: Double): String =
       if (b == b.toLong.toDouble) b.toLong.toString else b.toString
     buckets.indices.foreach { i =>
       cum += perBucket(i).sum()
-      sb.append(s"""${name}_bucket{le="${le(buckets(i))}"} $cum""").append('\n')
+      sb.append(s"""${name}_bucket$lblLe"${le(buckets(i))}"} $cum""").append('\n')
     }
-    sb.append(s"""${name}_bucket{le="+Inf"} ${count.sum()}""").append('\n')
-    sb.append(s"${name}_sum ${sumNanos.sum() / 1e9}\n")
-    sb.append(s"${name}_count ${count.sum()}")
+    sb.append(s"""${name}_bucket$lblLe"+Inf"} ${count.sum()}""").append('\n')
+    sb.append(s"${name}_sum$lbl ${sumNanos.sum() / 1e9}\n")
+    sb.append(s"${name}_count$lbl ${count.sum()}")
     sb.toString
   }
 }
 
+/** A labeled histogram family: one series per value of `label`, in the
+  * order given, under a single HELP/TYPE header. */
+final class PromHistogramFamily(name: String, help: String, label: String,
+                                values: Seq[String], buckets: Seq[Double]) {
+  private val series = values.map(v =>
+    v -> new PromHistogram(name, help, buckets, s"""$label="$v"""")).toMap
+
+  def apply(value: String): PromHistogram = series(value)
+
+  def exposition: String =
+    PromHistogram.header(name, help) + values.map(series(_).samples).mkString("\n")
+}
+
 object PromHistogram {
+  private[obs] def header(name: String, help: String): String =
+    s"# HELP $name $help\n# TYPE $name histogram\n"
+
   /** The reference's request-duration buckets, 1 ms to 1 s
     * (/root/reference/monitoring/metrics.go:16). */
   val DefaultBuckets: Seq[Double] =

@@ -5,27 +5,29 @@ import graft.core.{Codec, Schemas}
 import graft.core.Schemas.TickFrame
 import graft.queries.TickQueries
 import graft.storage.TickTable
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
 /** Streaming ingest end-to-end: MemoryStream of binary frames -> decode ->
   * enrichment -> micro-batch Parquet sink (FIXTURES.md §5 script 1). */
-class IngestSpec extends SparkSpec {
+class IngestSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def frame(token: String, seq: Long, tsMs: Long, ltpPaise: Long): Array[Byte] =
     Codec.encode(TickFrame(2, 1, token, seq, tsMs, ltpPaise,
       Some(10L), Some(ltpPaise), Some(100L), Some(1.0), Some(2.0),
       Some(ltpPaise), Some(ltpPaise + 100), Some(ltpPaise - 100), Some(ltpPaise)))
 
-  private def writeTokensJson(): String = {
-    val dir = Files.createTempDirectory("tokens").toFile
-    val f = new java.io.File(dir, "tokens.json")
-    val json =
+  private def writeTokensJson(json: String =
       """{"symbol": "RELIANCE", "token": "2885", "exchange": "NSE_CM"}
         |{"symbol": "NIFTY", "token": "43607", "exchange": "NSE_FO"}
-        |{"symbol": "BADEX", "token": "9999", "exchange": "NOPE_XX"}""".stripMargin
+        |{"symbol": "BADEX", "token": "9999", "exchange": "NOPE_XX"}""".stripMargin): String = {
+    val dir = Files.createTempDirectory("tokens").toFile
+    val f = new java.io.File(dir, "tokens.json")
     Files.writeString(f.toPath, json)
     f.getAbsolutePath
   }
@@ -37,6 +39,17 @@ class IngestSpec extends SparkSpec {
     assert(dim.filter(col("token") === "2885").select("exchange_type").head().getInt(0) === 1)
     val grouped = TokenDirectory.byExchange(dim).collect()
     assert(grouped.length === 2)
+    assert(dim.columns.toSeq === Seq("exchange", "symbol", "token", "exchange_type"))
+
+    // a token listed twice (here under two exchanges) would land each of
+    // its ticks twice; enrichment refuses it when the plan is built
+    val twice = TokenDirectory.load(spark, writeTokensJson(
+      """{"symbol": "RELIANCE", "token": "2885", "exchange": "NSE_CM"}
+        |{"symbol": "RELIANCE", "token": "2885", "exchange": "BSE_CM"}
+        |{"symbol": "NIFTY", "token": "43607", "exchange": "NSE_FO"}""".stripMargin))
+    val ticks = spark.range(1).select(lit("2885").as("token"))
+    val err = intercept[IllegalArgumentException](TokenDirectory.enrich(ticks, twice))
+    assert(err.getMessage.contains("2885") && !err.getMessage.contains("43607"), err.getMessage)
   }
 
   test("ingest pipeline: frames -> decode -> enrich -> parquet micro-batches") {
@@ -66,6 +79,12 @@ class IngestSpec extends SparkSpec {
     q.processAllAvailable()
     val progress = q.lastProgress
     q.stop()
+
+    // the directory was resolved when the plan was built: a micro-batch
+    // neither joins nor broadcasts
+    val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+    assert(collectWithSubqueries(plan) { case b: BroadcastExchangeExec => b }.isEmpty, plan)
+    assert(collectWithSubqueries(plan) { case j: BaseJoinExec => j }.isEmpty, plan)
 
     // malformed frames are counted on the batch's progress, not lost
     val observed = progress.observedMetrics.get(TickDecoder.Observation)

@@ -142,6 +142,29 @@ class ObsSpec extends SparkSpec {
         Thread.sleep(50)
       assert(listener.snapshot().linesIterator.contains("graft_decode_errors_total 2"),
         listener.snapshot())
+
+      // one phase histogram family: HELP/TYPE once, a series per
+      // durationMs phase, each observed once per batch
+      def count(m: String, re: String): Option[Long] =
+        re.r.findFirstMatchIn(m).map(_.group(1).toLong)
+      def phaseCounts(m: String): Seq[Option[Long]] = IngestMetricsListener.Phases.map(p =>
+        count(m, s"""graft_batch_phase_seconds_count\\{phase="$p"\\} (\\d+)"""))
+      def batches(m: String) = count(m, """graft_batches_processed_total (\d+)""")
+      val pDeadline = System.currentTimeMillis() + 10000
+      var m = listener.snapshot()
+      while (phaseCounts(m).exists(_ != batches(m)) && System.currentTimeMillis() < pDeadline) {
+        Thread.sleep(50); m = listener.snapshot()
+      }
+      assert(batches(m).exists(_ > 0), m)
+      assert(IngestMetricsListener.Phases ===
+        Seq("latestOffset", "queryPlanning", "addBatch", "walCommit", "commitOffsets"))
+      assert(phaseCounts(m).forall(_ == batches(m)), m)
+      assert(m.linesIterator.count(_ == "# TYPE graft_batch_phase_seconds histogram") === 1, m)
+      assert(m.linesIterator.count(_.startsWith("# HELP graft_batch_phase_seconds ")) === 1, m)
+      assert(m.contains("""graft_batch_phase_seconds_bucket{phase="addBatch",le="+Inf"}"""), m)
+      val addBatchSum = """graft_batch_phase_seconds_sum\{phase="addBatch"\} ([0-9.E-]+)""".r
+        .findFirstMatchIn(m).map(_.group(1).toDouble)
+      assert(addBatchSum.exists(_ > 0), s"the sink write must take time:\n$m")
     } finally spark.streams.removeListener(listener)
   }
 
